@@ -3,13 +3,26 @@
 north_star: "resumes from a partition-level checkpoint manifest so a
 killed run replays only incomplete splits."  A split = one warc_dt day
 partition.  The manifest is a JSON-lines file, one record per completed
-split, written atomically (tmp + rename) AFTER the split's output commit;
-a split's output write is idempotent (per-partition overwrite), so a
-crash between write and manifest append just replays that one split.
+split.
+
+One run = one Spark write job over every pending split: the scoring plan
+is built once over the pages filtered to the pending splits (a partition
+filter, so scan pruning still applies) and written with
+``partitionBy(warc_dt)`` under per-write dynamic partition overwrite —
+each pending split's ``{output}/warc_dt=<day>/`` is replaced, completed
+splits' dirs are never touched.  The records of all the run's splits are
+appended in one atomic manifest rewrite (tmp + rename) AFTER the job
+commits.  The replay unit is therefore the run's pending set: a crash
+before the manifest rewrite replays those splits, and since the output
+commit is idempotent per partition the replay converges to the same
+output.  A split is complete only once its record exists.
 
 Each manifest record doubles as the per-partition lineage/metrics row
 (the processing_time_ms + version envelope analog,
-/root/reference/app/pydantic_models.py:90-106).
+/root/reference/app/pydantic_models.py:90-106).  The per-split status
+counts come from ONE observe() on the rows the write consumes (one
+conditional sum per (split, status)), not from a scan per split;
+``wall_sec`` is the job's wall time, shared by every split it wrote.
 """
 
 from __future__ import annotations
@@ -26,6 +39,8 @@ from quality_filter.config import DEFAULT_ARTIFACT_DIR, RuleConfig
 from quality_filter.io.pages import PARTITION_COL, read_pages, with_partition_col
 from quality_filter.pipeline import tiered_scored
 
+STATUSES = ("keep", "drop", "quarantine")
+
 
 class Manifest:
     def __init__(self, path: str) -> None:
@@ -41,10 +56,10 @@ class Manifest:
     def completed_splits(self) -> set[str]:
         return {r["split"] for r in self.records()}
 
-    def mark_done(self, record: dict) -> None:
-        """Atomic append: rewrite to tmp, rename over."""
-        recs = self.records()
-        recs.append(record)
+    def mark_done(self, *records: dict) -> None:
+        """Atomic append of one or more records: rewrite to tmp, rename
+        over."""
+        recs = self.records() + list(records)
         tmp = self.path + ".tmp"
         with open(tmp, "w", encoding="utf-8") as f:
             for r in recs:
@@ -73,57 +88,67 @@ def run_with_resume(
     cfg: RuleConfig | None = None,
     artifact_dir: str = DEFAULT_ARTIFACT_DIR,
 ) -> dict:
-    """Process every pending day split; skip completed ones.  Returns a
-    run summary.  Output layout: ``{output}/warc_dt=<day>/`` parquet with
-    the scored schema (status column included → downstream partition
-    filters)."""
+    """Process every pending day split in one write job; skip completed
+    ones.  Returns a run summary.  Output layout: ``{output}/warc_dt=<day>/``
+    parquet with the scored schema (status column included → downstream
+    partition filters)."""
     manifest = Manifest(manifest_path)
     done = manifest.completed_splits()
     splits = list_splits(spark, input_path)
     pending = [s for s in splits if s not in done]
-
-    pages = read_pages(spark, input_path)
-    if PARTITION_COL not in pages.columns:
-        pages = with_partition_col(pages)
-
-    processed = []
-    statuses = ("keep", "drop", "quarantine")
-    for split in pending:
+    if pending:
         t0 = time.perf_counter()
-        part = pages.filter(F.col(PARTITION_COL) == split).drop(PARTITION_COL)
-        scored = tiered_scored(part, cfg, artifact_dir)
-        split_dir = os.path.join(output_path, f"{PARTITION_COL}={split}")
+        pages = read_pages(spark, input_path)
+        if PARTITION_COL not in pages.columns:
+            pages = with_partition_col(pages)
+        part = pages.filter(F.col(PARTITION_COL).isin(pending))
+        # the split key of each output row is the table's own partition
+        # transform over the scored warc_ts — the same expression that laid
+        # out the input, so a row lands in the dir of the split it came from
+        scored = with_partition_col(tiered_scored(part, cfg, artifact_dir))
 
         # lineage via observe(): metrics are collected ON the rows the
         # write consumes — same numbers as re-reading the committed
-        # output, without a second full read of the sink (at 100 TB the
-        # old read-back doubled sink-side I/O per split)
-        obs = Observation(f"qf_{split}")
+        # output, without a second read of the sink
+        obs = Observation()
         observed = scored.observe(
             obs,
             *[
-                F.sum(F.when(F.col("status") == s, 1).otherwise(0)).alias(s)
-                for s in statuses
+                F.sum(
+                    F.when((F.col(PARTITION_COL) == s) & (F.col("status") == st), 1)
+                    .otherwise(0)
+                ).alias(f"{s}/{st}")
+                for s in pending
+                for st in STATUSES
             ],
         )
-        observed.write.mode("overwrite").parquet(split_dir)
+        (
+            observed.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(PARTITION_COL)
+            .parquet(output_path)
+        )
         metrics = obs.get  # blocks until the write action finishes
-        by_status = {s: int(metrics[s] or 0) for s in statuses if metrics[s]}
-        record = {
-            "split": split,
-            "rows_out": int(sum(by_status.values())),
-            "by_status": by_status,
-            "wall_sec": round(time.perf_counter() - t0, 3),
-            "engine_version": __version__,
-            "input": input_path,
-        }
-        manifest.mark_done(record)
-        processed.append(split)
+        wall_sec = round(time.perf_counter() - t0, 3)
+        records = []
+        for s in pending:
+            by_status = {
+                st: int(metrics[f"{s}/{st}"]) for st in STATUSES if metrics[f"{s}/{st}"]
+            }
+            records.append({
+                "split": s,
+                "rows_out": sum(by_status.values()),
+                "by_status": by_status,
+                "wall_sec": wall_sec,
+                "engine_version": __version__,
+                "input": input_path,
+            })
+        manifest.mark_done(*records)
 
     return {
         "splits_total": len(splits),
         "splits_skipped": len(splits) - len(pending),
-        "splits_processed": processed,
+        "splits_processed": pending,
     }
 
 

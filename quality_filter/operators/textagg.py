@@ -1382,6 +1382,8 @@ def zipf_fit(df: DataFrame, text_col: str, k: int = ZIPF_HEAD_K) -> DataFrame:
     from pyspark.sql import Window
 
     head = top_terms(df, text_col, k)
+    # unpartitioned on purpose: the window sees only the K-row head
+    # (TakeOrderedAndProject output), never the corpus or the vocabulary
     w = Window.orderBy(F.col("n").desc(), F.col("term").asc())
     ranked = head.select(F.row_number().over(w).alias("r"), "n")
     return _loglog_ls_fit(ranked, F.col("r"), F.col("n"), "n_terms")
@@ -1477,6 +1479,8 @@ def heaps_fit(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         full = assigned.sparkSession.createDataFrame(
             [(c,) for c in cs], "c long"
         ).join(hist, "c", "left")
+        # unpartitioned on purpose: one row per checkpoint, <= 64 rows
+        # whatever the corpus size (powers of two below max_id + 1)
         w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
         return full.select(
             "c",

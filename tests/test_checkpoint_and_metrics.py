@@ -93,6 +93,94 @@ def test_resume_lineage_without_output_reread(spark, pages_dir, tmp_path, monkey
         assert rec["rows_out"] == sum(rec["by_status"].values()) > 0
 
 
+def _resume_with_done(spark, pages_dir, out, man, done):
+    """run_with_resume into ``out`` after recording ``done`` splits as
+    completed in a fresh manifest (the state a killed run leaves)."""
+    m = Manifest(man)
+    m.mark_done(*[{"split": s} for s in done])
+    return run_with_resume(spark, pages_dir, out, man)
+
+
+def test_resume_is_one_job_whatever_the_pending_count(spark, pages_dir, tmp_path):
+    """All pending splits are written by one job: resuming 1 pending
+    split and resuming 3 launch the same number of Spark jobs, so a
+    per-split loop (one job, plan build and task tail per split) cannot
+    come back unnoticed."""
+    sc = spark.sparkContext
+    splits = list_splits(spark, pages_dir)
+    jobs = {}
+    for name, done in (("one", splits[:2]), ("three", [])):
+        group = f"resume_jobs_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            summary = _resume_with_done(
+                spark, pages_dir, str(tmp_path / f"out_{name}"),
+                str(tmp_path / f"man_{name}.jsonl"), done,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert summary["splits_processed"] == [s for s in splits if s not in done]
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["one"] == jobs["three"] > 0, jobs
+
+
+def _dir_bytes(d):
+    out = {}
+    for root, _, files in os.walk(d):
+        for f in files:
+            p = os.path.join(root, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, d)] = fh.read()
+    return out
+
+
+def test_resume_replaces_pending_dirs_and_leaves_completed_untouched(
+    spark, pages_dir, tmp_path
+):
+    """Dynamic partition overwrite: a stale half-written file in a
+    PENDING split's dir is replaced by the resumed run, while a completed
+    split's dir — marker file included — stays byte-identical."""
+    out = str(tmp_path / "out_dyn")
+    splits = list_splits(spark, pages_dir)
+    run_with_resume(spark, pages_dir, out, str(tmp_path / "man_full.jsonl"))
+
+    done_dir = os.path.join(out, f"warc_dt={splits[0]}")
+    pend_dir = os.path.join(out, f"warc_dt={splits[1]}")
+    with open(os.path.join(done_dir, "_marker"), "w") as f:
+        f.write("completed split, must survive")
+    stale = os.path.join(pend_dir, "part-99999-stale.parquet")
+    with open(stale, "wb") as f:
+        f.write(b"PAR1 half-written")
+    before = _dir_bytes(done_dir)
+
+    summary = _resume_with_done(
+        spark, pages_dir, out, str(tmp_path / "man_resume.jsonl"), splits[:1]
+    )
+    assert summary["splits_processed"] == splits[1:]
+    assert not os.path.exists(stale)
+    assert _dir_bytes(done_dir) == before
+    # every split readable again, no row lost or duplicated
+    assert spark.read.parquet(out).count() == 300
+
+
+def test_resume_output_dirs_hold_their_splits_urls(spark, pages_dir, tmp_path):
+    """Each output ``warc_dt=<day>`` dir holds exactly the urls of input
+    split <day>: the write's split key is the input's partition
+    transform."""
+    out = str(tmp_path / "out_urls")
+    run_with_resume(spark, pages_dir, out, str(tmp_path / "man_urls.jsonl"))
+    want = (
+        spark.read.parquet(pages_dir).select(F.col("warc_dt").cast("string"), "url")
+        .toPandas().groupby("warc_dt")["url"].apply(set).to_dict()
+    )
+    got = {
+        d.split("=", 1)[1]: set(pd.read_parquet(os.path.join(out, d), columns=["url"])["url"])
+        for d in os.listdir(out)
+        if d.startswith("warc_dt=")
+    }
+    assert got == want and len(got) == 3
+
+
 def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
     """Small-file compaction: a fragmented day-partition collapses to
     few files with identical rows; already-compact partitions are

@@ -967,3 +967,23 @@ def test_bpe_merge_curve_monotone_and_consistent(spark):
         for r in textagg.bpe_token_counts(df, "text", "doc_id", n_merges=4).collect()
     )
     assert curve[max(curve)] == total_docs
+
+
+def test_curriculum_order_empty_corpus_matches_oracle(spark, tmp_path):
+    """An empty documents table has no decile boundaries: the Spark query
+    must return 0 rows with the oracle's columns instead of failing on
+    the NULL percentile array (the oracle SQL returns 0 rows)."""
+    import duckdb
+
+    import __spark_entry__ as E
+
+    d = str(tmp_path / "sf_empty")
+    spark.read.parquet(f"{SF}/documents.parquet").limit(0).write.parquet(
+        f"{d}/documents.parquet"
+    )
+    sdf = E.queries()["curriculum_order"](spark, d)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet/*.parquet'")
+    odf = con.sql(E.oracle_sql()["curriculum_order"])
+    assert odf.fetchall() == [] and sdf.collect() == []
+    assert sorted(sdf.columns) == sorted(c[0] for c in odf.description)
