@@ -14,11 +14,15 @@ simhash, LSH/IVF ANN, and the LSH near-dup path.
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import operator
 import os
 import sys
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
@@ -40,6 +44,17 @@ BAND_SIZE = dedup.DEFAULT_BAND_SIZE
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _fast_gate() -> tuple[dict[str, Column], Column, Column]:
+    """FAST-profile shadow of the production gate over ``text`` (ppl_norm
+    = 0): the feature columns, the quality score, and keep = no hard rule
+    fires and the score clears the threshold."""
+    feats = R.feature_columns(F.col("text"), CFG)
+    feats["ppl_norm"] = F.lit(0.0)
+    q = R.quality_score_col(feats, CFG)
+    fail_any = functools.reduce(operator.or_, (c for _, c in R.hard_rule_reasons(feats, CFG)))
+    return feats, q, ~fail_any & (q >= CFG.quality_threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -260,14 +275,7 @@ def q_quality_gate_docs(spark, sf_dir):
     """FAST-profile heuristic gate over the documents table — the fully
     SQL-expressible shadow of the production pipeline."""
     docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    q = R.quality_score_col(feats, CFG)
-    hard = R.hard_rule_reasons(feats, CFG)
-    fail_any = None
-    for _, cond in hard:
-        fail_any = cond if fail_any is None else (fail_any | cond)
-    keep = ~fail_any & (q >= CFG.quality_threshold)
+    _, q, keep = _fast_gate()
     return docs.select(
         "doc_id", F.round(q, 6).alias("quality_score"), keep.alias("keep_heuristic")
     )
@@ -279,13 +287,7 @@ def _distill_base(spark, sf_dir):
     from quality_filter.operators import distill
 
     docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    q = R.quality_score_col(feats, CFG)
-    fail_any = None
-    for _, cond in R.hard_rule_reasons(feats, CFG):
-        fail_any = cond if fail_any is None else (fail_any | cond)
-    keep = ~fail_any & (q >= CFG.quality_threshold)
+    feats, _, keep = _fast_gate()
     return docs, distill.staged_base(docs, "doc_id", feats, keep)
 
 
@@ -482,13 +484,7 @@ def q_source_reputation_flags(spark, sf_dir):
     shuffled on doc_id.  keep_frac is a division of exact integer
     counts, so the threshold compare is bit-identical cross-engine."""
     docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    q = R.quality_score_col(feats, CFG)
-    fail_any = None
-    for _, cond in R.hard_rule_reasons(feats, CFG):
-        fail_any = cond if fail_any is None else (fail_any | cond)
-    keep = ~fail_any & (q >= CFG.quality_threshold)
+    _, _, keep = _fast_gate()
     scored = docs.select("doc_id", "source", keep.alias("keep"))
     rep = scored.groupBy("source").agg(
         (F.sum(F.col("keep").cast("long")) / F.count(F.lit(1))).alias("frac")
@@ -516,9 +512,7 @@ def q_quality_score_histogram(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    q = R.quality_score_col(feats, CFG)
+    _, q, _ = _fast_gate()
     bin_ = F.least(F.floor(q * N_SCORE_BINS), F.lit(N_SCORE_BINS - 1)).cast("long")
     hist = (
         docs.select(bin_.alias("bin"))
@@ -550,9 +544,7 @@ def q_score_drift_psi(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    q = R.quality_score_col(feats, CFG)
+    _, q, _ = _fast_gate()
     bin_ = F.least(F.floor(q * N_SCORE_BINS), F.lit(N_SCORE_BINS - 1)).cast("long")
     b = docs.select(F.col("doc_id"), bin_.alias("bin"))
     old = (
@@ -685,9 +677,7 @@ def q_gate_funnel(spark, sf_dir):
     O(reasons), never O(docs), so the funnel costs one narrow pass at
     any corpus size."""
     docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    q = R.quality_score_col(feats, CFG)
+    feats, q, _ = _fast_gate()
     chain = None
     for name, cond in R.hard_rule_reasons(feats, CFG):
         chain = F.when(cond, name) if chain is None else chain.when(cond, name)
@@ -758,13 +748,7 @@ def q_gate_distill_stats(spark, sf_dir):
     (see tests).  Output: one wide row (cast to BIGINT at the edge —
     exact up to ~9e18; the decimal stays upstream at 10^12-doc scale)."""
     docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    q = R.quality_score_col(feats, CFG)
-    fail_any = None
-    for _, cond in R.hard_rule_reasons(feats, CFG):
-        fail_any = cond if fail_any is None else (fail_any | cond)
-    keep = ~fail_any & (q >= CFG.quality_threshold)
+    feats, _, keep = _fast_gate()
     xs = {
         "bias": F.lit(1.0),
         "stop": feats["stopword_ratio"],
@@ -1059,13 +1043,7 @@ def q_corpus_curation(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
 
     # 1. heuristic gate (FAST shadow — same predicate as quality_gate_docs)
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    hard = R.hard_rule_reasons(feats, CFG)
-    fail_any = None
-    for _, cond in hard:
-        fail_any = cond if fail_any is None else (fail_any | cond)
-    keep = ~fail_any & (R.quality_score_col(feats, CFG) >= CFG.quality_threshold)
+    _, _, keep = _fast_gate()
     gated = docs.filter(keep)
 
     # 2. exact-dup representatives (min doc_id per fingerprint)
@@ -1112,12 +1090,7 @@ def _v2_reps(docs):
     )
 
     # 1. heuristic gate
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    fail_any = None
-    for _, cond in R.hard_rule_reasons(feats, CFG):
-        fail_any = cond if fail_any is None else (fail_any | cond)
-    keep = ~fail_any & (R.quality_score_col(feats, CFG) >= CFG.quality_threshold)
+    _, _, keep = _fast_gate()
     gated = urled.filter(keep)
 
     # 2. exact-dup representatives
@@ -1209,9 +1182,7 @@ def q_quality_contribs_docs(spark, sf_dir):
     documents table, FAST-profile shadow (ppl_norm = 0), exploded to
     (doc_id, term, contrib) rows so the oracle hash covers map values."""
     docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    m = R.quality_contribs_col(feats, CFG)
+    m = R.quality_contribs_col(_fast_gate()[0], CFG)
     # + 0.0 collapses IEEE -0.0 to +0.0 (Spark's round() normalizes the
     # sign, DuckDB's keeps it — both engines get the explicit normalize)
     return docs.select("doc_id", F.explode(m).alias("term", "contrib")).select(
@@ -1721,9 +1692,7 @@ def q_doc_quality_deciles(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    q = F.round(R.quality_score_col(feats, CFG), 6)
+    q = F.round(_fast_gate()[1], 6)
     # unpartitioned on purpose, and NOT small at corpus scale: the input
     # is the whole documents table, so this form stays a test-scale
     # oracle of record (sf0.01: 500 docs).  Corpus-scale jobs use
@@ -1766,9 +1735,7 @@ def q_doc_quality_decile_bounds(spark, sf_dir):
     the test-scale oracle of record for exact ranks.  decile 1 = top
     scores, matching that form's ORDER BY score DESC."""
     docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    q = F.round(R.quality_score_col(feats, CFG), 6)
+    q = F.round(_fast_gate()[1], 6)
     scored = docs.select("doc_id", q.alias("quality_score"))
     bounds = scored.agg(
         F.transform(
@@ -1804,9 +1771,7 @@ def q_curriculum_order(spark, sf_dir):
     from quality_filter.operators import windows as WD
 
     docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    q = F.round(R.quality_score_col(feats, CFG), 6)
+    q = F.round(_fast_gate()[1], 6)
     scored = docs.select("doc_id", q.alias("quality_score"))
     bounds = scored.agg(
         F.transform(
@@ -2601,9 +2566,7 @@ def q_host_reputation(spark, sf_dir):
     to the O(hosts) dimension before the join."""
     docs = _t(spark, sf_dir, "documents")
     pages = _ol_pages(docs)  # bound ONCE: host map + edges share the subtree
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    qm = F.floor(F.round(R.quality_score_col(feats, CFG), 6) * 1e6).cast("long")
+    qm = F.floor(F.round(_fast_gate()[1], 6) * 1e6).cast("long")
     scored = docs.select("doc_id", qm.alias("q_micro")).join(
         pages.select("doc_id", "host"), "doc_id"
     )
@@ -2634,9 +2597,7 @@ def q_host_trustrank(spark, sf_dir):
     integer (graph.pagerank_personalized)."""
     docs = _t(spark, sf_dir, "documents")
     pages = _ol_pages(docs)  # bound ONCE: host map + edges share the subtree
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    qm = F.floor(F.round(R.quality_score_col(feats, CFG), 6) * 1e6).cast("long")
+    qm = F.floor(F.round(_fast_gate()[1], 6) * 1e6).cast("long")
     hq = (
         docs.select("doc_id", qm.alias("q_micro"))
         .join(pages.select("doc_id", "host"), "doc_id")
@@ -3121,7 +3082,7 @@ def q_collocation_pmi(spark, sf_dir):
     return textagg.collocation_pmi_topk(docs, "text", k=PMI_K, min_count=PMI_MIN_COUNT)
 
 
-def q_doc_novelty(spark, sf_dir):
+def q_doc_novelty_docs(spark, sf_dir):
     """Per-doc novelty: fraction of the doc's distinct 3-gram shingles
     first seen in THIS doc (corpus-wide min-id first occurrence) — the
     originality signal separating source pages from mirrors/recombined
@@ -3131,7 +3092,7 @@ def q_doc_novelty(spark, sf_dir):
     return dedup.doc_novelty(docs, "text", "doc_id", n=NOVELTY_NGRAM)
 
 
-def q_word_entropy(spark, sf_dir):
+def q_word_entropy_docs(spark, sf_dir):
     """Shannon word-entropy + type-token ratio per doc — the
     low-entropy gibberish/boilerplate detector of CCNet/Gopher-style
     webtext filters (templated or repeated text scores near 0; TTR is
@@ -3163,7 +3124,7 @@ def q_word_entropy(spark, sf_dir):
     ).select("doc_id", "_e.word_entropy", "_e.ttr")
 
 
-def q_encoding_noise(spark, sf_dir):
+def q_encoding_noise_docs(spark, sf_dir):
     """Mojibake / encoding-damage signals per doc: U+FFFD count,
     control-char count, non-ASCII ratio, and the suspect flag —
     codegen'd regexp_count narrow maps (functions/textstats
@@ -3229,7 +3190,7 @@ def q_kn_continuation_stats(spark, sf_dir):
     return textagg.kn_continuation_stats(docs, "text")
 
 
-def q_mojibake_repair(spark, sf_dir):
+def q_mojibake_repair_docs(spark, sf_dir):
     """Mojibake repair (ftfy-lite): the ordered literal replace chain
     that undoes common UTF-8-as-latin1 double-encode artifacts — the
     fixer companion to encoding_noise_docs' detector.  Documents are
@@ -3255,7 +3216,7 @@ OOV_VOCAB = 30  # small vs the ~40-word synthetic vocabulary so the
 # OOV branch is genuinely exercised at test scale
 
 
-def q_oov_rate(spark, sf_dir):
+def q_oov_rate_docs(spark, sf_dir):
     """Per-doc OOV rate vs the corpus top-V vocabulary — the tokenizer
     coverage report (deterministic top-V: count desc, term asc; exact
     integer counts; broadcast vocab dim — textagg.oov_rate)."""
@@ -3700,7 +3661,7 @@ def q_segment_dedup_docs(spark, sf_dir):
 BOILER_MIN_DF = 3  # sf0.01 has 15 segments at df>=3 (max 6) — removal fires
 
 
-def q_boilerplate_scrub(spark, sf_dir):
+def q_boilerplate_scrub_docs(spark, sf_dir):
     """RefinedWeb-style boilerplate scrub: remove EVERY occurrence of
     any segment repeated >= BOILER_MIN_DF times corpus-wide (the
     nav-bar / cookie-banner verb; segment_dedup's keep-first sibling
@@ -3741,13 +3702,7 @@ def q_incremental_curation(spark, sf_dir):
     incremental_near_dup → anti-join; every stage shuffles on batch-
     bounded keys, the corpus side is only ever read as its band index."""
     docs = _t(spark, sf_dir, "documents")
-    feats = R.feature_columns(F.col("text"), CFG)
-    feats["ppl_norm"] = F.lit(0.0)
-    q = R.quality_score_col(feats, CFG)
-    fail_any = None
-    for _, cond in R.hard_rule_reasons(feats, CFG):
-        fail_any = cond if fail_any is None else (fail_any | cond)
-    keep = ~fail_any & (q >= CFG.quality_threshold)
+    _, q, keep = _fast_gate()
     new_kept = docs.filter(F.col("doc_id") % INCR_NEW_MOD == 0).filter(keep).select(
         "doc_id", "text", F.round(q, 6).alias("quality_score")
     )
@@ -3804,192 +3759,19 @@ def q_knn_ivf(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # INVARIANT (checked in tests): every query WITHOUT a driver-green row
-    # in the last two CORRECTNESS reports must sit inside the driver's
-    # ~50-entry window, or in ONE contiguous overflow block right after
-    # it — insert NEW queries at the FRONT.
-    # Round-6 rotation: the 76 entries unreported in r04/r05 lead (the 12
-    # never-reported ones, distilled_gate_reliability .. bpe_merge_curve,
-    # first); their last 26 form the overflow block at positions 50-75;
-    # the r04/r05-green entries follow in their previous order.
-    return {
-        "distilled_gate_reliability": q_distilled_gate_reliability,
-        "cluster_balanced_sample": q_cluster_balanced_sample,
-        "rule_ablation_report": q_rule_ablation_report,
-        "bpe_train_merges": q_bpe_train_merges,
-        "bpe_token_counts_docs": q_bpe_token_counts_docs,
-        "bpe_compression_by_lang": q_bpe_compression_by_lang,
-        "curriculum_order": q_curriculum_order,
-        "packed_docs_bpe": q_packed_docs_bpe,
-        "zipf_fit_audit": q_zipf_fit_audit,
-        "heaps_fit_audit": q_heaps_fit_audit,
-        "bpe_vocab": q_bpe_vocab,
-        "bpe_merge_curve": q_bpe_merge_curve,
-        "minhash_jaccard_estimate": q_minhash_jaccard_estimate,
-        "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-        "knn_bruteforce": q_knn_bruteforce,
-        "purchase_last_view_asof": q_purchase_last_view_asof,
-        "orders_grouping_sets": q_orders_grouping_sets,
-        "event_type_pivot": q_event_type_pivot,
-        "event_counts_unpivot": q_event_counts_unpivot,
-        "doc_quality_deciles": q_doc_quality_deciles,
-        "doc_length_quantiles": q_doc_length_quantiles,
-        "running_value_sum": q_running_value_sum,
-        "active_positive_custkeys": q_active_positive_custkeys,
-        "shipping_priority": q_shipping_priority,
-        "supplier_part_breadth": q_supplier_part_breadth,
-        "customer_order_cume": q_customer_order_cume,
-        "embedding_near_dup_pairs": q_embedding_near_dup_pairs,
-        "pii_scrub_docs": q_pii_scrub_docs,
-        "simhash_docs": q_simhash_docs,
-        "simhash_near_dup": q_simhash_near_dup,
-        "hopping_event_stats": q_hopping_event_stats,
-        "embedding_clusters": q_embedding_clusters,
-        "knn_lsh": q_knn_lsh,
-        "knn_lsh_multiprobe": q_knn_lsh_multiprobe,
-        "knn_ivf": q_knn_ivf,
-        "knn_join": q_knn_join,
-        "knn_join_broadcast": q_knn_join_broadcast,
-        "embedding_centroids_by_label": q_embedding_centroids_by_label,
-        "benchmark_decontamination": q_benchmark_decontamination,
-        "source_mixing_rates": q_source_mixing_rates,
-        "pricing_summary": q_pricing_summary,
-        "revenue_by_nation": q_revenue_by_nation,
-        "top_suppliers_by_revenue": q_top_suppliers_by_revenue,
-        "rollup_orders": q_rollup_orders,
-        "customers_without_orders": q_customers_without_orders,
-        "salted_user_stats": q_salted_user_stats,
-        "decimated_events": q_decimated_events,
-        "tumbling_agg_mean": q_tumbling_agg_mean,
-        "tumbling_agg_median": q_tumbling_agg_median,
-        "tumbling_agg_max": q_tumbling_agg_max,
-        "tumbling_agg_min": q_tumbling_agg_min,
-        "hourly_event_stats": q_hourly_event_stats,
-        "forward_fill_purchase": q_forward_fill_purchase,
-        "sessionized_counts": q_sessionized_counts,
-        "topk_events_per_user": q_topk_events_per_user,
-        "text_stats": q_text_stats,
-        "stopword_ratio_docs": q_stopword_ratio_docs,
-        "symbol_density_docs": q_symbol_density_docs,
-        "quality_gate_docs": q_quality_gate_docs,
-        "quality_contribs_docs": q_quality_contribs_docs,
-        "dup_ngram_ratio_docs": q_dup_ngram_ratio_docs,
-        "packed_docs": q_packed_docs,
-        "corpus_curation": q_corpus_curation,
-        "docs_hash_sample": q_docs_hash_sample,
-        "docs_stratified_sample": q_docs_stratified_sample,
-        "corpus_top_terms": q_corpus_top_terms,
-        "tfidf_top_docs": q_tfidf_top_docs,
-        "lang_guess_docs": q_lang_guess_docs,
-        "doc_fingerprints": q_doc_fingerprints,
-        "dedup_exact_docs": q_dedup_exact_docs,
-        "minhash_signatures": q_minhash_signatures,
-        "lsh_band_keys": q_lsh_band_keys,
-        "near_dup_pairs": q_near_dup_pairs,
-        "near_dup_clusters": q_near_dup_clusters,
-        "near_dup_survivors": q_near_dup_survivors,
-        "ngram_jaccard_dups": q_ngram_jaccard_dups,
-        "moore_lewis_selection": q_moore_lewis_selection,
-        "pii_pseudonymize_docs": q_pii_pseudonymize_docs,
-        "bbit_minhash_estimate": q_bbit_minhash_estimate,
-        "hll_vocab_estimate": q_hll_vocab_estimate,
-        "gate_distill_weights": q_gate_distill_weights,
-        "distilled_gate_agreement": q_distilled_gate_agreement,
-        "near_dup_quality_survivors": q_near_dup_quality_survivors,
-        "boilerplate_scrub_docs": q_boilerplate_scrub,
-        "decontamination_report": q_decontamination_report,
-        "ccnet_ppl_buckets": q_ccnet_ppl_buckets,
-        "url_blocklist_gate": q_url_blocklist_gate,
-        "ann_recall_report": q_ann_recall_report,
-        "doremi_mixture_weights": q_doremi_mixture_weights,
-        "ngram_jaccard_global": q_ngram_jaccard_global,
-        "minhash_band_scurve": q_minhash_band_scurve,
-        "doremi_token_budget": q_doremi_token_budget,
-        "semantic_decontamination": q_semantic_decontamination,
-        "corpus_curation_v3": q_corpus_curation_v3,
-        "corpus_curation_v2_staged": q_corpus_curation_v2_staged,
-        "crawl_media_near_dup": q_crawl_media_near_dup,
-        "anchor_text_terms": q_anchor_text_terms,
-        "robots_noindex_flags": q_robots_noindex_flags,
-        "bpe_merge_round": q_bpe_merge_round,
-        "crawl_frontier_topk": q_crawl_frontier_topk,
-        "warc_roundtrip_stats": q_warc_roundtrip_stats,
-        "host_degree_stats": q_host_degree_stats,
-        "frontier_politeness_rounds": q_frontier_politeness_rounds,
-        "exact_substring_dedup": q_exact_substring_dedup,
-        "dedup_savings_report": q_dedup_savings_report,
-        "winnowing_survivors": q_winnowing_survivors,
-        "host_reputation": q_host_reputation,
-        "collocation_pmi": q_collocation_pmi,
-        "doc_novelty_docs": q_doc_novelty,
-        "mirror_host_pairs": q_mirror_host_pairs,
-        "word_entropy_docs": q_word_entropy,
-        "tfidf_cosine_pairs": q_tfidf_cosine_pairs,
-        "frontier_robots": q_frontier_robots,
-        "encoding_noise_docs": q_encoding_noise,
-        "corpus_datasheet": q_corpus_datasheet,
-        "knn_quantized_int8": q_knn_quantized_int8,
-        "host_trustrank": q_host_trustrank,
-        "kn_doc_surprisal": q_kn_doc_surprisal,
-        "host_hits": q_host_hits,
-        "redirect_resolution": q_redirect_resolution,
-        "crawl_budget_allocation": q_crawl_budget_allocation,
-        "wet_roundtrip_stats": q_wet_roundtrip_stats,
-        "oov_rate_docs": q_oov_rate,
-        "mojibake_repair_docs": q_mojibake_repair,
-        "crawl_fetch_plan": q_crawl_fetch_plan,
-        "cross_source_dup_matrix": q_cross_source_dup_matrix,
-        "host_pagerank": q_host_pagerank,
-        "bm25_top_docs": q_bm25_top_docs,
-        "bm25_indexed": q_bm25_indexed,
-        "langid_confusion": q_langid_confusion,
-        "kn_bigram_counts": q_kn_bigram_counts,
-        "kn_continuation_stats": q_kn_continuation_stats,
-        "score_drift_psi": q_score_drift_psi,
-        "winnowing_fingerprints": q_winnowing_fingerprints,
-        "winnowing_pairs": q_winnowing_pairs,
-        "corpus_snapshot_diff": q_corpus_snapshot_diff,
-        "bpe_pair_counts": q_bpe_pair_counts,
-        "orc_roundtrip_stats": q_orc_roundtrip_stats,
-        "dsir_bucket_ratios": q_dsir_bucket_ratios,
-        "dsir_logweights_docs": q_dsir_logweights_docs,
-        "dsir_sample_docs": q_dsir_sample_docs,
-        "kmeans_step": q_kmeans_step,
-        "kmeans_refined_clusters": q_kmeans_refined_clusters,
-        "jsonl_roundtrip_stats": q_jsonl_roundtrip_stats,
-        "csv_roundtrip_stats": q_csv_roundtrip_stats,
-        "unit_dedup_docs": q_unit_dedup_docs,
-        "gate_funnel": q_gate_funnel,
-        "url_dedup_docs": q_url_dedup_docs,
-        "semantic_dedup": q_semantic_dedup,
-        "near_dup_clusters_labelprop": q_near_dup_clusters_labelprop,
-        "gate_distill_stats": q_gate_distill_stats,
-        "corpus_token_budget": q_corpus_token_budget,
-        "containment_pairs": q_containment_pairs,
-        "repetition_profile_docs": q_repetition_profile_docs,
-        "corpus_curation_v2": q_corpus_curation_v2,
-        "weighted_sample_docs": q_weighted_sample_docs,
-        "term_cms_sketch": q_term_cms_sketch,
-        "pii_hit_counts_docs": q_pii_hit_counts_docs,
-        "toxicity_gate_docs": q_toxicity_gate_docs,
-        "minhash_containment_estimate": q_minhash_containment_estimate,
-        "hourly_unique_users": q_hourly_unique_users,
-        "benchmark_decontamination_bloom": q_benchmark_decontamination_bloom,
-        "segment_dedup_docs": q_segment_dedup_docs,
-        "incremental_near_dup": q_incremental_near_dup,
-        "incremental_curation": q_incremental_curation,
-        "source_reputation_flags": q_source_reputation_flags,
-        "quality_score_histogram": q_quality_score_histogram,
-        "doc_chunks": q_doc_chunks,
-        "mixture_epoch_upsample": q_mixture_epoch_upsample,
-        "temperature_mixture_rates": q_temperature_mixture_rates,
-        "temperature_mixture_sample": q_temperature_mixture_sample,
-        "doc_quality_decile_bounds": q_doc_quality_decile_bounds,
-        "doc_length_quantiles_approx": q_doc_length_quantiles_approx,
-        "media_near_dup": q_media_near_dup,
-        "outlink_host_edges": q_outlink_host_edges,
-        "outlink_pagerank": q_outlink_pagerank,
-    }
+    """The registry: every ``q_<name>`` function of this module, keyed by
+    ``<name>``.
+
+    Stalest first, so the driver's ~50-entry report window reaches the
+    queries it has not checked lately: names are ordered by the index of
+    the last ``CORRECTNESS_r*.json`` report that lists them (-1 if none
+    does).  The sort is stable, so ties keep definition order."""
+    reg = {n[2:]: f for n, f in globals().items() if n.startswith("q_")}
+    last: dict[str, int] = {}
+    for i, rp in enumerate(sorted(glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json")))):
+        with open(rp) as f:
+            last.update(dict.fromkeys(json.load(f), i))
+    return {n: reg[n] for n in sorted(reg, key=lambda n: last.get(n, -1))}
 
 
 # ---------------------------------------------------------------------------

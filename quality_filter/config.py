@@ -1,10 +1,10 @@
 """Frozen pipeline configuration.
 
 The closed-enum + frozen-config pattern follows the reference's
-``Preprocessing{YAHOO,SIMPLE}`` (/root/reference/opennsfw2/_image.py:15-17)
-and ``Aggregation{MEAN,MEDIAN,MAX,MIN}``
-(/root/reference/opennsfw2/_inference.py:119-123): a small, closed set of
-switches that select exactly-specified pipeline variants.  The config is
+``Preprocessing{YAHOO,SIMPLE}`` (opennsfw2/_image.py:15-17):
+a small, closed set of switches that select exactly-specified pipeline
+variants.  (The reference's ``Aggregation`` enum is a per-call argument
+here: ``operators.windows.AGG_FNS``.)  The config is
 serialized to ``rules.json`` and shipped to executors as a broadcast
 artifact (never downloaded at task time — the anti-pattern the reference's
 Dockerfile pre-warm works around, /root/reference/Dockerfile:28-30).
@@ -23,7 +23,6 @@ DEFAULT_ARTIFACT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.absp
 
 # Closed enums (kept as strings so they survive JSON + Spark columns).
 PROFILES = ("FULL", "FAST")          # FAST skips the LM-perplexity stage
-AGGREGATIONS = ("MEAN", "MEDIAN", "MAX", "MIN")
 
 
 @dataclass(frozen=True)
@@ -46,7 +45,6 @@ class RuleConfig:
     """
 
     profile: str = "FULL"
-    aggregation: str = "MEAN"
 
     # --- heuristic (Gopher/C4-style) rule thresholds ------------------
     min_chars: int = 80
@@ -107,16 +105,10 @@ class RuleConfig:
     frame_interval: int = 8                   # decimation: score every k-th row
     aggregation_size: int = 4                 # tumbling window size (rows)
 
-    # --- scale mechanics -------------------------------------------------
-    salt_buckets: int = 16                    # deterministic url-host salting
-    arrow_batch_size: int = 2048              # maxRecordsPerBatch for model stages
-
     # ---------------------------------------------------------------------
     def __post_init__(self) -> None:
         if self.profile not in PROFILES:
             raise ValueError(f"profile must be one of {PROFILES}, got {self.profile!r}")
-        if self.aggregation not in AGGREGATIONS:
-            raise ValueError(f"aggregation must be one of {AGGREGATIONS}, got {self.aggregation!r}")
 
     def to_json(self) -> str:
         d = dataclasses.asdict(self)

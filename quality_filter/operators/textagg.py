@@ -1353,6 +1353,10 @@ def cms_estimate(sketch_rows, term: str, depth: int = CMS_DEPTH, width: int = CM
 
 
 ZIPF_HEAD_K = 1000
+# Grid scale of the Zipf/Heaps fits: x = floor(ln(v) * ZIPF_SCALE).  The
+# cross-engine hash assumes the JVM and DuckDB compute ln to the same
+# double; one ulp of difference next to an integer would flip a floor.  A test checks that every grid value on the
+# sf0.01 documents table clears its nearest integer by more than 2 ulps.
 ZIPF_SCALE = 10**9
 
 

@@ -6,18 +6,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Rows per Arrow batch into the pandas-UDF model stages: 1024 and >= 8192
+# both measured about 2x slower (SURVEY.md §8).
+ARROW_BATCH_ROWS = 2048
+
 
 def get_spark(
     cpus: int | str | None = None,
     app_name: str = "quality_filter",
     shuffle_partitions: int | None = None,
-    arrow_batch_size: int = 2048,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """local[N] session tuned for the pipeline.
 
     On a real cluster the same settings ride in via spark-submit; nothing
-    here is local-only semantics.  Arrow batch size bounds the rows per
+    here is local-only semantics.  ARROW_BATCH_ROWS bounds the rows per
     model call in the pandas-UDF stages — the ``batch_size`` knob analog
     (/root/reference/opennsfw2/_inference.py:89).
     """
@@ -44,7 +47,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_size))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.driver.memory", os.environ.get("QF_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")

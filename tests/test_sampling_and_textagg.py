@@ -448,7 +448,7 @@ def test_oov_rate_registry_conservation(spark):
     and with the small test vocabulary some OOV genuinely occurs."""
     import __spark_entry__ as E
 
-    out = E.q_oov_rate(spark, SF).collect()
+    out = E.q_oov_rate_docs(spark, SF).collect()
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     assert len(out) == docs.count()
     assert all(0 <= r["n_oov"] <= r["n_tokens"] for r in out)
@@ -711,6 +711,36 @@ def test_zipf_fit_degenerate_single_term(spark):
     row = textagg.zipf_fit(df, "text").collect()[0]
     assert row["n_terms"] == 1
     assert row["slope"] is None and row["intercept"] is None and row["r2"] is None
+
+
+def test_zipf_heaps_ln_grid_clears_integers(spark, docs, monkeypatch):
+    """Every ln(v) * ZIPF_SCALE that zipf_fit and heaps_fit floor on the
+    sf0.01 documents table lies more than 2 ulps of itself from an
+    integer (exact zeros from v = 1 excepted), so a one-ulp difference
+    between the JVM's and DuckDB's ln cannot flip a grid value and break
+    the zipf_fit_audit / heaps_fit_audit hash silently."""
+    import math
+
+    from quality_filter.operators import textagg
+
+    points = []
+    core = textagg._loglog_ls_fit
+
+    def spy(pts, xv, yv, count_alias):
+        points.append(pts.select(xv.cast("double"), yv.cast("double")).collect())
+        return core(pts, xv, yv, count_alias)
+
+    monkeypatch.setattr(textagg, "_loglog_ls_fit", spy)
+    textagg.zipf_fit(docs, "text")
+    textagg.heaps_fit(docs, "text", "doc_id")
+    vals = [v for rows in points for r in rows for v in r]
+    assert len(points) == 2 and all(points)
+    for v in vals:
+        t = math.log(v) * textagg.ZIPF_SCALE
+        if v == 1.0:
+            assert t == 0.0
+            continue
+        assert abs(t - round(t)) > 2 * math.ulp(t), (v, t)
 
 
 def test_heaps_fit_growth_and_invariants(spark):

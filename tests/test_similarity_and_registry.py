@@ -666,6 +666,15 @@ def test_driver_window_covers_unreported_queries():
         )
 
 
+def test_every_query_has_an_oracle_twin():
+    """queries() is every q_<name> function of __spark_entry__, so a
+    helper named q_* by mistake, or a query without its DuckDB twin,
+    shows up here as a key mismatch."""
+    import __spark_entry__ as E
+
+    assert set(E.queries()) == set(E.oracle_sql())
+
+
 def test_int8_quantization_matches_numpy_spec_bitwise(spark, emb):
     """quantize_int8_col emits EXACTLY the integers of the IEEE spec
     floor(x * (127/max|x|) + 0.5) recomputed in numpy float64, row for
